@@ -127,61 +127,19 @@ def _warm_python_workers(spark, cores: int) -> None:
     )
 
 
-def _run_crawl(cores: int) -> dict:
+def _run_crawl(cores: int, big: bool = False) -> dict:
+    """One timed engine crawl at local[cores]. ``big=True`` is the big-round
+    regime the contract metric describes (BASELINE.md scale demonstration):
+    thousands of hosts, effectively unbounded politeness budget, rounds of
+    10^4-10^5 URLs where per-URL python fetch+parse work dominates the fixed
+    per-round cost. That configuration's local[32] throughput is the
+    headline `value`."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
     from crawlspark.storage import CrawlStorage
 
-    spark = make_spark(cores, 8, aqe=False)
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix=f"bench-crawl-{cores}-")
-    try:
-        cfg = CrawlConfig(
-            max_depth=2,
-            max_rounds=16,
-            web_hosts=250,
-            round_seconds=3000.0,
-            shuffle_partitions=cores,
-        )
-        engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
-        seeds = synthweb.seed_list(cfg, n=500)
-        _warm_python_workers(spark, cores)
-        t0 = time.time()
-        summary = engine.run(seeds)
-        wall = time.time() - t0
-        deduped = sum(m.deduped for m in engine.history)
-        fetched = summary["totals"]["fetched"]
-        return {
-            "cores": cores,
-            "wall_sec": round(wall, 2),
-            "fetched": fetched,
-            "deduped": deduped,
-            "seen": summary["totals"]["seen"],
-            "rounds": summary["rounds"],
-            "exhausted": summary["exhausted"],
-            "throughput_urls_per_sec": round((fetched + deduped) / wall, 1),
-        }
-    finally:
-        spark.stop()
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _run_big_crawl(cores: int) -> dict:
-    """The big-round regime the contract metric describes (BASELINE.md scale
-    demonstration): thousands of hosts, effectively unbounded politeness
-    budget, rounds of 10^4-10^5 URLs where per-URL python fetch+parse work
-    dominates the fixed per-round cost. This is the configuration whose
-    local[32] throughput is the headline `value`."""
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-    from crawlspark.sources import synthweb
-    from crawlspark.storage import CrawlStorage
-
-    spark = make_spark(cores, max(8, cores), aqe=False)
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix=f"bench-bigcrawl-{cores}-")
-    try:
+    if big:
         cfg = CrawlConfig(
             max_depth=3,
             max_rounds=8,
@@ -189,8 +147,22 @@ def _run_big_crawl(cores: int) -> dict:
             round_seconds=1e9,  # politeness effectively unbounded: big rounds
             shuffle_partitions=max(8, cores),
         )
+        n_seeds, name = 4000, "bigcrawl"
+    else:
+        cfg = CrawlConfig(
+            max_depth=2,
+            max_rounds=16,
+            web_hosts=250,
+            round_seconds=3000.0,
+            shuffle_partitions=cores,
+        )
+        n_seeds, name = 500, "crawl"
+    spark = make_spark(cores, max(8, cores) if big else 8, aqe=False)
+    spark.sparkContext.setLogLevel("ERROR")
+    root = tempfile.mkdtemp(prefix=f"bench-{name}-{cores}-")
+    try:
         engine = CrawlEngine(spark, cfg, CrawlStorage(spark, root))
-        seeds = synthweb.seed_list(cfg, n=4000)
+        seeds = synthweb.seed_list(cfg, n=n_seeds)
         _warm_python_workers(spark, cores)
         t0 = time.time()
         summary = engine.run(seeds)
@@ -233,7 +205,7 @@ def bench_big_crawl() -> dict:
     for c in (32, 8, 8, 32):
         if len(runs) >= 2 and time.time() - t0 > part_budget:
             break
-        runs.append(_run_big_crawl(c))
+        runs.append(_run_crawl(c, big=True))
     r32s = [r for r in runs if r["cores"] == 32]
     r8s = [r for r in runs if r["cores"] == 8]
     r32 = max(r32s, key=lambda r: r["throughput_urls_per_sec"])

@@ -1,12 +1,20 @@
 """Batch-iterative crawl engine (SURVEY.md §3 E1; BASELINE.json:6 north_star).
 
-One driver loop iteration = one crawl round:
+One driver loop iteration = one crawl round. ``run_round`` runs it as an
+ordered list of phase methods; each bracketed stage is run by the method
+named beside it:
 
-  frontier snapshot → [cuckoo ban prefilter → broadcast robots join → robots
-  path match] → [per-host priority ranking → crawl-delay budget admission] →
-  [salted repartition → mapInPandas fetch/parse] → documents + edges appends →
-  [canonicalize extracted links → intra-round dedup → Bloom prefilter →
-  exact seen anti-join] → next frontier snapshot → atomic manifest commit.
+  _admit       frontier snapshot → [cuckoo ban prefilter → broadcast robots
+               join → robots path match]
+  _rank        [per-host priority ranking → crawl-delay budget admission]
+  _fetch       [salted repartition → mapInPandas fetch/parse] → edges append
+  _candidates  [canonicalized extracted links → priority policy →
+               intra-round dedup]
+  _seen        [Bloom prefilter → exact seen anti-join] → seen append
+  _tail        [documents + next frontier snapshot + metrics appends ‖
+               Bloom fold + filter checkpoint ‖ fused round counters]
+  _commit      [atomic manifest commit]
+  _maintain    [Bloom blob GC → seen/edges compaction → frontier expiry]
 
 Crawl-ordering determinism (BASELINE.json:14 "matching the reference's crawl
 ordering"): the reference is sequential, so a parallel engine reproduces its
@@ -119,6 +127,23 @@ def _signed64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
+def _next_frontier_size(manifest: dict, default: int = 0) -> int:
+    """Size of the frontier snapshot a committed round leaves for the next
+    round (bootstrap manifests record only ``frontier_size``)."""
+    return manifest.get("next_frontier_size", manifest.get("frontier_size", default))
+
+
+def _first_wins(df: DataFrame) -> DataFrame:
+    """A1 first-wins dedup: keep each url_hash's earliest row in discovery
+    order."""
+    w = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 # Per-python-worker cache of deserialized filter structures. Bloom blobs are
 # keyed by their immutable (sidecar-path, round, bucket) identity, so entries
 # stay valid across rounds; Arrow batches after the first are pure probes.
@@ -147,6 +172,36 @@ class RoundMetrics:
     extras: dict = field(default_factory=dict)
 
 
+@dataclass
+class _Round:
+    """What one round's phases hand each other: the previous round's
+    manifest, this round's metrics, and the frames a later phase reads.
+    Frames cached through ``keep`` are released when the round ends."""
+
+    rnd: int
+    prev: dict
+    m: RoundMetrics
+    approx: int = 0  # frontier size, exact from the previous manifest
+    py_parts: int = 4  # width of the round's bucket-keyed Python stages
+    fr: DataFrame | None = None  # frontier with is_banned / is_allowed flags
+    eligible: DataFrame | None = None
+    disallowed: DataFrame | None = None
+    banned_deferred: DataFrame | None = None
+    admitted: DataFrame | None = None
+    deferred: DataFrame | None = None
+    fetched: DataFrame | None = None
+    edges: DataFrame | None = None
+    linked: DataFrame | None = None  # edges whose target is within max_depth
+    cand: DataFrame | None = None
+    new: DataFrame | None = None
+    seen_add: DataFrame | None = None
+    cached: list[DataFrame] = field(default_factory=list)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        self.cached.append(df)
+        return df.persist()
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, storage: CrawlStorage):
         self.spark = spark
@@ -166,6 +221,11 @@ class CrawlEngine:
         # basis round, so the cache is a recompute-avoidance only — resume
         # or cache loss recomputes the identical frame.
         self._rank_cache: tuple[int, DataFrame] | None = None
+        # A6 frontier cardinality estimate of the previous round (sizes new
+        # Bloom buckets) and the round-invariant robots dimension (built on
+        # first use).
+        self._last_distinct_est = 0
+        self._robots_cached: DataFrame | None = None
 
     def _bloom_capacity(self) -> int:
         """Per-bucket Bloom capacity, sized from the A6 cardinality estimate
@@ -176,16 +236,31 @@ class CrawlEngine:
         undersizing only raises the FP rate, and the exact anti-join
         backstop keeps correctness independent of the estimate (SURVEY.md
         §2.3 exactness invariant)."""
-        est = int(getattr(self, "_last_distinct_est", 0) or 0)
-        per_bucket = -(-est * 4 // max(1, self.cfg.num_host_buckets))
+        per_bucket = -(-self._last_distinct_est * 4 // max(1, self.cfg.num_host_buckets))
         return max(1 << 16, per_bucket)
+
+    def _py_parts(self, *caps: int) -> int:
+        """Width of a Python stage keyed by host bucket: at least 4 tasks,
+        at most one per bucket, per configured shuffle partition and per
+        extra cap given."""
+        return max(4, min(self.cfg.shuffle_partitions, self.cfg.num_host_buckets, *caps))
+
+    def _load_filters(self, rnd: int) -> None:
+        """Restore the Bloom index and cuckoo filter committed with round
+        ``rnd`` (the latest committed pickle is authoritative on resume)."""
+        state = self.storage.load_filters(rnd)
+        self._bloom_index = {int(b): int(r) for b, r in state["bloom_index"].items()}
+        self.cuckoo = CuckooFilter.from_bytes(state["cuckoo"])
+
+    def _save_filters(self, rnd: int) -> None:
+        self.storage.save_filters(rnd, dict(self._bloom_index), self.cuckoo.to_bytes())
 
     # ------------------------------------------------------------ robots
     def _robots_df(self) -> DataFrame:
         """Robots dim is round-invariant for a given config: build the
         DataFrame once and reuse (the per-round rebuild re-ran the python
         rule-table conversion and re-planned the broadcast every round)."""
-        if getattr(self, "_robots_cached", None) is not None:
+        if self._robots_cached is not None:
             return self._robots_cached
         rows = synthweb.robots_table(self.cfg)
         schema = T.StructType(
@@ -280,9 +355,7 @@ class CrawlEngine:
                 out["maybe_seen"] = res
                 yield out
 
-        parts = n_parts or max(
-            4, min(self.cfg.shuffle_partitions, self.cfg.num_host_buckets)
-        )
+        parts = n_parts or self._py_parts()
         return cand.repartition(parts, "host_hash").mapInPandas(probe, out_schema)
 
     def _admission_flags_udf(self):
@@ -316,9 +389,9 @@ class CrawlEngine:
         return _flags
 
     # --------------------------------------------------------- bootstrap
-    def bootstrap(self, seeds: list[str]) -> None:
-        """Round 0: seed list → canonical dedup'd frontier + seen + filters."""
-        cfg = self.cfg
+    def _seed_frontier(self, seeds: list[str], rnd: int) -> DataFrame:
+        """Seed URLs → frontier rows discovered in round ``rnd``: canonical,
+        at depth 0 / priority 0.0, first-wins deduped by seed position."""
         seeds_df = self.spark.createDataFrame(
             [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
         )
@@ -327,25 +400,22 @@ class CrawlEngine:
             seeds_df.withColumn("url_canon", canon("url"))
             .filter(F.col("url_canon").isNotNull())
         )
-        fr = with_url_identity(fr, num_buckets=cfg.num_host_buckets)
+        fr = with_url_identity(fr, num_buckets=self.cfg.num_host_buckets)
         fr = (
             fr.withColumn("depth", F.lit(0))
             .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_round", F.lit(0))
+            .withColumn("discovered_round", F.lit(rnd))
             .withColumn("d_time", F.lit(0.0))
             .withColumn("d_host", F.lit(""))
             .withColumn("d_rank", F.col("seed_pos"))
             .withColumn("d_pos", F.lit(0))
             .withColumn("parent_hash", F.lit(None).cast("long"))
         )
-        # A1 first-wins dedup on the discovery-order tuple
-        w = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        fr = (
-            fr.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*FRONTIER_COLS)
-        )
-        self.storage.write_round("frontier", fr, 0)
+        return _first_wins(fr).select(*FRONTIER_COLS)
+
+    def bootstrap(self, seeds: list[str]) -> None:
+        """Round 0: seed list → canonical dedup'd frontier + seen + filters."""
+        self.storage.write_round("frontier", self._seed_frontier(seeds, 0), 0)
         seen0 = self.storage.read_round("frontier", 0).select(
             "url_hash", "url_canon", "host_hash", F.lit(0).alias("first_round")
         )
@@ -353,7 +423,7 @@ class CrawlEngine:
         # A5: Bloom sidecar from round-0 seen
         self._fold_into_bloom(self.storage.read_round("seen", 0), 0)
         self._refresh_cuckoo(0)
-        self.storage.save_filters(0, dict(self._bloom_index), self.cuckoo.to_bytes())
+        self._save_filters(0)
         n = self.storage.read_round("frontier", 0).count()
         self.storage.commit_manifest(
             0, {"phase": "bootstrap", "frontier_size": n, "totals": {"seen": n}}
@@ -387,40 +457,8 @@ class CrawlEngine:
             n = self.storage.manifest(0)["frontier_size"]
             return {"round": 0, "injected": n, "phase": "bootstrap"}
         rnd = latest["round"] + 1
-        # resume-shaped state load: the latest committed filter pickle is
-        # authoritative between runs (same path run() takes)
-        state = self.storage.load_filters(latest["round"])
-        self._bloom_index = {
-            int(b): int(r) for b, r in state["bloom_index"].items()
-        }
-        self.cuckoo = CuckooFilter.from_bytes(state["cuckoo"])
-
-        cfg = self.cfg
-        seeds_df = self.spark.createDataFrame(
-            [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
-        )
-        canon = canonicalize_udf()
-        fr = (
-            seeds_df.withColumn("url_canon", canon("url"))
-            .filter(F.col("url_canon").isNotNull())
-        )
-        fr = with_url_identity(fr, num_buckets=cfg.num_host_buckets)
-        fr = (
-            fr.withColumn("depth", F.lit(0))
-            .withColumn("priority", F.lit(0.0))
-            .withColumn("discovered_round", F.lit(rnd))
-            .withColumn("d_time", F.lit(0.0))
-            .withColumn("d_host", F.lit(""))
-            .withColumn("d_rank", F.col("seed_pos"))
-            .withColumn("d_pos", F.lit(0))
-            .withColumn("parent_hash", F.lit(None).cast("long"))
-        )
-        w = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        fr = (
-            fr.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*FRONTIER_COLS)
-        )
+        self._load_filters(latest["round"])
+        fr = self._seed_frontier(seeds, rnd)
         seen = self.storage.read_table("seen", upto_round=rnd - 1).select(
             "host_hash", "url_hash"
         )
@@ -437,12 +475,8 @@ class CrawlEngine:
         self.storage.write_round("seen", seen_add, rnd)
         n_new = self.storage.read_round("seen", rnd).count()
         self._fold_into_bloom(self.storage.read_round("seen", rnd), rnd)
-        self.storage.save_filters(
-            rnd, dict(self._bloom_index), self.cuckoo.to_bytes()
-        )
-        prev_size = latest.get(
-            "next_frontier_size", latest.get("frontier_size", 0)
-        )
+        self._save_filters(rnd)
+        prev_size = _next_frontier_size(latest)
         totals = dict(latest.get("totals", {}))
         totals["seen"] = totals.get("seen", 0) + n_new
         self.storage.commit_manifest(
@@ -490,10 +524,8 @@ class CrawlEngine:
         # group key satisfies the groupBy's clustering, so applyInPandas adds
         # no second shuffle and small rounds spin up few python workers
         # instead of spark.sql.shuffle.partitions of them (worker-attach is
-        # real fixed cost — see run_round's fetch sizing).
-        parts = n_parts or max(
-            4, min(self.cfg.shuffle_partitions, self.cfg.num_host_buckets)
-        )
+        # real fixed cost — see _fetch's sizing).
+        parts = n_parts or self._py_parts()
         blob_df = (
             seen_rows.select("host_hash", "url_hash")
             .repartition(parts, "host_hash")
@@ -511,18 +543,39 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- round
     def run_round(self, rnd: int) -> RoundMetrics:
-        """Consume frontier snapshot rnd-1, commit round rnd."""
-        cfg, sp = self.cfg, self.spark
-        m = RoundMetrics(round=rnd)
+        """Consume frontier snapshot rnd-1, commit round rnd. The phases run
+        in order, each timed into ``m.extras["timings"]`` under its name;
+        the frames they cached are released when the round ends."""
+        st = _Round(rnd, self.storage.manifest(rnd - 1) or {}, RoundMetrics(round=rnd))
         timings: dict[str, float] = {}
-        _t0 = [time.time()]
+        for phase in (
+            self._admit,
+            self._rank,
+            self._fetch,
+            self._candidates,
+            self._seen,
+            self._tail,
+            self._commit,
+            self._maintain,
+        ):
+            t0 = time.perf_counter()
+            phase(st)
+            timings[phase.__name__.lstrip("_")] = time.perf_counter() - t0
+        st.m.extras["timings"] = timings
+        for df in st.cached:
+            df.unpersist()
+        self.history.append(st.m)
+        return st.m
 
-        def tick(phase: str) -> None:
-            now = time.time()
-            timings[phase] = round(now - _t0[0], 3)
-            _t0[0] = now
-
+    def _admit(self, st: _Round) -> None:
+        """Size the round, then flag each frontier row banned (A4) and
+        robots-allowed (R2) and split the frontier by its flags."""
+        cfg, rnd = self.cfg, st.rnd
         frontier = self.storage.read_round("frontier", rnd - 1).select(*FRONTIER_COLS)
+        st.approx = _next_frontier_size(st.prev)
+        # A6 feed-forward: the previous round's HLL estimate sizes any NEW
+        # per-bucket Bloom filters this round's fold creates
+        self._last_distinct_est = int(st.prev.get("frontier_distinct_est", 0) or 0)
 
         # Size this round's shuffle width from the (already known) frontier
         # size: every job barrier costs latency proportional to task count,
@@ -530,27 +583,16 @@ class CrawlEngine:
         # overhead (a 1.4k-URL round does not need 32-partition windows).
         # At cluster scale rounds are large and this clamps to the
         # configured width. Applies to window/join/groupBy stages planned
-        # this round; results are partition-count invariant (pinned by the
-        # cross-parallelism determinism tests).
-        prev_m = self.storage.manifest(rnd - 1) or {}
-        approx = int(
-            prev_m.get("next_frontier_size", prev_m.get("frontier_size", 0)) or 0
-        )
-        # A6 feed-forward: the previous round's HLL estimate sizes any NEW
-        # per-bucket Bloom filters this round's fold creates
-        self._last_distinct_est = int(prev_m.get("frontier_distinct_est", 0) or 0)
-        round_parts = max(
-            8,
-            min(
-                cfg.shuffle_partitions,
-                -(-approx * 4 // cfg.fetch_rows_per_partition),
-            ),
-        )
-        sp.conf.set("spark.sql.shuffle.partitions", str(round_parts))
+        # this round, and caps the bucket-keyed Python stages (Bloom probe
+        # and fold) the same way; results are partition-count invariant
+        # (pinned by the cross-parallelism determinism tests).
+        need = -(-st.approx * 4 // cfg.fetch_rows_per_partition)
+        round_parts = max(8, min(cfg.shuffle_partitions, need))
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(round_parts))
+        st.py_parts = self._py_parts(need)
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
-        robots = self._robots_df()
-        fr = frontier.join(F.broadcast(robots), "host", "left")
+        fr = frontier.join(F.broadcast(self._robots_df()), "host", "left")
         fr = fr.withColumn("crawl_delay", F.coalesce("crawl_delay", F.lit(1.0)))
 
         # A4 cuckoo ban prefilter + R2 robots path match, fused into one
@@ -560,7 +602,7 @@ class CrawlEngine:
         fr = fr.withColumn(
             "_flags", self._admission_flags_udf()("host", "url_canon", "rules")
         )
-        fr = (
+        fr = st.fr = st.keep(
             fr.withColumn(
                 "is_banned",
                 F.col("_flags.maybe_banned")
@@ -571,39 +613,41 @@ class CrawlEngine:
                 "is_allowed", F.coalesce(F.col("_flags.allowed"), F.lit(True))
             )
             .drop("_flags")
-            .persist()
         )
         # Stats over this frame are NOT computed here: all of the round's
         # counters fold into ONE tagged-union aggregation job (_round_stats)
         # in the round-tail parallel group — nothing on the fetch path
         # depends on them.
-        m.frontier_size = approx  # exact: the previous manifest's arithmetic
-
-        tick("admission_plan")
+        st.m.frontier_size = st.approx  # exact: the previous manifest's arithmetic
 
         # Banned rows: deferred (stay in frontier) when an unban is coming,
         # dropped permanently when the ban is forever (else no exhaustion).
         banned_rows = fr.filter(F.col("is_banned"))
-        banned_deferred = (
+        st.banned_deferred = (
             banned_rows if cfg.unban_round is not None else banned_rows.limit(0)
         )
-        disallowed = fr.filter(~F.col("is_banned") & ~F.col("is_allowed"))
-        eligible = fr.filter(~F.col("is_banned") & F.col("is_allowed"))
+        st.disallowed = fr.filter(~F.col("is_banned") & ~F.col("is_allowed"))
+        st.eligible = fr.filter(~F.col("is_banned") & F.col("is_allowed"))
 
-        # P2–P4: per-host ranking, budget admission, virtual fetch clock
+    def _rank(self, st: _Round) -> None:
+        """P2–P4: per-host ranking, budget admission, virtual fetch clock."""
         w = Window.partitionBy("host").orderBy(*DISCOVERY_ORDER)
-        ranked = eligible.withColumn("host_rank", F.row_number().over(w))
         budget = F.greatest(
-            F.lit(1), F.floor(F.lit(cfg.round_seconds) / F.col("crawl_delay"))
+            F.lit(1), F.floor(F.lit(self.cfg.round_seconds) / F.col("crawl_delay"))
         )
-        ranked = ranked.withColumn("host_budget", budget).persist()
-        admitted = ranked.filter(F.col("host_rank") <= F.col("host_budget"))
-        deferred = ranked.filter(F.col("host_rank") > F.col("host_budget"))
-        admitted = admitted.withColumn(
-            "fetch_time", F.col("host_rank") * F.col("crawl_delay")
+        ranked = st.keep(
+            st.eligible.withColumn("host_rank", F.row_number().over(w))
+            .withColumn("host_budget", budget)
         )
+        st.deferred = ranked.filter(F.col("host_rank") > F.col("host_budget"))
+        st.admitted = ranked.filter(
+            F.col("host_rank") <= F.col("host_budget")
+        ).withColumn("fetch_time", F.col("host_rank") * F.col("crawl_delay"))
 
-        # G3 salted repartition → F1/F2 fetch+parse (mapInPandas).
+    def _fetch(self, st: _Round) -> None:
+        """G3 salted repartition → F1/F2 fetch+parse → F3 links → S4 edges
+        append."""
+        cfg = self.cfg
         # Partition count adapts to the frontier size (known exactly from
         # the previous manifest — no counting job): python-stage tasks have
         # real fixed cost, so small rounds use few fat partitions, big
@@ -615,7 +659,7 @@ class CrawlEngine:
             4,
             min(
                 cfg.shuffle_partitions,
-                -(-max(approx, 1) // _fetch_rows_target(cfg)),
+                -(-max(st.approx, 1) // _fetch_rows_target(cfg)),
             ),
         )
         # salt cardinality must be MUCH larger than the partition count:
@@ -624,29 +668,11 @@ class CrawlEngine:
         # 64x oversalting gives each host ~64 keys per partition so the
         # per-partition key-count variance (std ~ sqrt(keys)) stays small
         salt_n = fetch_parts * 64
-        admitted = admitted.withColumn(
+        admitted = st.admitted.withColumn(
             "salt", F.pmod(F.xxhash64("url_canon"), F.lit(salt_n))
         ).repartition(fetch_parts, "host_hash", "salt")
-        fetched = admitted.mapInPandas(
-            _make_fetcher(cfg), FETCH_SCHEMA
-        ).persist()
-
-        # S3 documents append (contract schema + bookkeeping)
-        docs = (
-            fetched.withColumn("spans", F.expr(_SPANS_EXPR))
-            .withColumn("content_sha2", F.sha2(F.to_json(F.col("spans")), 256))
-            .select(
-                F.col("url_canon").alias("doc_id"),
-                "spans",
-                "url_hash",
-                "host",
-                "host_hash",
-                "depth",
-                "fetch_time",
-                "host_rank",
-                "status",
-                "content_sha2",
-            )
+        fetched = st.fetched = st.keep(
+            admitted.mapInPandas(_make_fetcher(cfg), FETCH_SCHEMA)
         )
 
         # F3 link extraction → S4 edges append. Links arrive from the fetch
@@ -670,10 +696,12 @@ class CrawlEngine:
             .drop("_lnk")
             .filter(F.col("dst_canon").isNotNull())
         )
-        edges = with_url_identity(
-            edges.withColumnRenamed("dst_canon", "url_canon"),
-            num_buckets=cfg.num_host_buckets,
-        ).persist()
+        edges = st.edges = st.keep(
+            with_url_identity(
+                edges.withColumnRenamed("dst_canon", "url_canon"),
+                num_buckets=cfg.num_host_buckets,
+            )
+        )
         edges_out = edges.select(
             "src_hash",
             F.col("href").alias("dst_url"),
@@ -686,27 +714,27 @@ class CrawlEngine:
         # documents sink only reads the (already materialized) fetch cache
         # and is deferred into the round-tail parallel group — the round
         # pays one barrier here, not two.
-        self.storage.write_round("edges", edges_out, rnd)
-        tick("edges_write")
+        self.storage.write_round("edges", edges_out, st.rnd)
 
-        # U1/U2: candidate frontier rows with lineage
-        cand = (
-            edges.filter(F.col("p_depth") + 1 <= cfg.max_depth)
-            .select(
-                F.col("href").alias("url"),
-                "url_canon",
-                "url_hash",
-                "host",
-                "host_hash",
-                (F.col("p_depth") + 1).alias("depth"),
-                (F.col("p_depth") + 1).cast("double").alias("priority"),
-                F.lit(rnd).alias("discovered_round"),
-                F.col("p_time").alias("d_time"),
-                F.col("p_host").alias("d_host"),
-                F.col("p_rank").alias("d_rank"),
-                F.col("pos").alias("d_pos"),
-                F.col("src_hash").alias("parent_hash"),
-            )
+    def _candidates(self, st: _Round) -> None:
+        """U1/U2 candidate frontier rows with lineage → P1 priority policy →
+        A1 intra-round first-wins dedup."""
+        cfg, rnd = self.cfg, st.rnd
+        st.linked = st.edges.filter(F.col("p_depth") + 1 <= cfg.max_depth)
+        cand = st.linked.select(
+            F.col("href").alias("url"),
+            "url_canon",
+            "url_hash",
+            "host",
+            "host_hash",
+            (F.col("p_depth") + 1).alias("depth"),
+            (F.col("p_depth") + 1).cast("double").alias("priority"),
+            F.lit(rnd).alias("discovered_round"),
+            F.col("p_time").alias("d_time"),
+            F.col("p_host").alias("d_host"),
+            F.col("p_rank").alias("d_rank"),
+            F.col("pos").alias("d_pos"),
+            F.col("src_hash").alias("parent_hash"),
         )
         # P1 priority policy: "indegree" boosts URLs linked more often this
         # round — priority = depth - min(n_links, cap)/(cap+1). The count
@@ -726,217 +754,208 @@ class CrawlEngine:
             )
             cand = cand.withColumn("priority", F.col("priority") - boost)
         elif cfg.priority_mode == "pagerank":
-            # P1 "pagerank": rank this round's candidates by exact
-            # fixed-point-integer PageRank (ops/graph) over the edge graph
-            # accumulated so far — edges rounds <= rnd; this round's edges
-            # were just written above, so the ranking sees them. The ranks
-            # are bit-deterministic (integer sums are associative-exact),
-            # so the sequential oracle replays the identical boost; the
-            # float discipline matches "indegree": one long→double cast,
-            # one division by 10^12 (exactly representable), one
-            # subtraction. boost < 1 by construction (a single node's
-            # scaled rank is < SCALE), so depth levels never interleave.
-            # Cost is fixed per round: one scan of the edges-so-far table
-            # + O(pagerank_iterations) jobs (test_pagerank_priority_jobs_
-            # are_flat) — the per-round rendering of authority-ordered
-            # crawling (Cho, Garcia-Molina & Page, WWW 1998 [pub]).
-            from crawlspark.ops.graph import SCALE, pagerank
+            cand = self._with_pagerank_boost(cand, rnd)
+        st.cand = _first_wins(cand)
 
-            # Staleness knob (cfg.pagerank_every = k): rank against edges
-            # through basis = rnd - (rnd % k). basis == 0 → no boost yet
-            # (pure bfs round). Ranks for a basis are computed once and
-            # cached; pure-function-of-storage semantics keep resume exact
-            # and let the oracle replay the identical staleness.
-            k_every = max(1, cfg.pagerank_every)
-            basis = rnd - (rnd % k_every)
-            ranks = None
-            if basis > 0:
-                if self._rank_cache is not None and self._rank_cache[0] == basis:
-                    ranks = self._rank_cache[1]
-                else:
-                    g = self.storage.read_table(
-                        "edges", upto_round=basis
-                    ).select(
-                        F.col("src_hash").alias("src"),
-                        F.col("dst_hash").alias("dst"),
-                    )
-                    nodes = (
-                        g.select(F.col("src").alias("node"))
-                        .unionByName(g.select(F.col("dst").alias("node")))
-                        .distinct()
-                    )
-                    ranks = pagerank(
-                        g, nodes, iterations=cfg.pagerank_iterations
-                    )
-                    self._rank_cache = (basis, ranks)
-            if ranks is not None:
-                boost = (
-                    F.least(
-                        F.coalesce(
-                            F.col("pagerank_scaled"), F.lit(0).cast("long")
-                        ),
-                        F.lit(SCALE - 1).cast("long"),
-                    ).cast("double")
-                    / F.lit(float(SCALE))
-                )
-                cand = (
-                    cand.join(
-                        ranks.withColumnRenamed("node", "url_hash"),
-                        "url_hash",
-                        "left",
-                    )
-                    .withColumn("priority", F.col("priority") - boost)
-                    .drop("pagerank_scaled")
-                )
-        # A1 intra-round first-wins dedup
-        wdup = Window.partitionBy("url_hash").orderBy(*DISCOVERY_ORDER)
-        cand = (
-            cand.withColumn("_rn", F.row_number().over(wdup))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        tick("candidates_dedup")
+    def _with_pagerank_boost(self, cand: DataFrame, rnd: int) -> DataFrame:
+        """P1 "pagerank": rank this round's candidates by exact
+        fixed-point-integer PageRank (ops/graph) over the edge graph
+        accumulated so far — edges rounds <= rnd; this round's edges were
+        just written by _fetch, so the ranking sees them. The ranks are
+        bit-deterministic (integer sums are associative-exact), so the
+        sequential oracle replays the identical boost; the float discipline
+        matches "indegree": one long→double cast, one division by 10^12
+        (exactly representable), one subtraction. boost < 1 by construction
+        (a single node's scaled rank is < SCALE), so depth levels never
+        interleave. Cost is fixed per round: one scan of the edges-so-far
+        table + O(pagerank_iterations) jobs (test_pagerank_priority_jobs_
+        are_flat) — the per-round rendering of authority-ordered crawling
+        (Cho, Garcia-Molina & Page, WWW 1998 [pub])."""
+        from crawlspark.ops.graph import SCALE, pagerank
 
-        # A3 Bloom prefilter → A2 exact anti-join backstop. The probe is
-        # co-partitioned with the sidecar blobs by host_hash and persisted so
-        # both branches read one materialization.
-        py_parts = max(
-            4,
-            min(
-                cfg.shuffle_partitions,
-                cfg.num_host_buckets,
-                -(-m.frontier_size * 4 // cfg.fetch_rows_per_partition),
-            ),
+        cfg = self.cfg
+        # Staleness knob (cfg.pagerank_every = k): rank against edges
+        # through basis = rnd - (rnd % k). basis == 0 → no boost yet
+        # (pure bfs round). Ranks for a basis are computed once and
+        # cached; pure-function-of-storage semantics keep resume exact
+        # and let the oracle replay the identical staleness.
+        k_every = max(1, cfg.pagerank_every)
+        basis = rnd - (rnd % k_every)
+        if basis == 0:
+            return cand
+        if self._rank_cache is not None and self._rank_cache[0] == basis:
+            ranks = self._rank_cache[1]
+        else:
+            g = self.storage.read_table("edges", upto_round=basis).select(
+                F.col("src_hash").alias("src"),
+                F.col("dst_hash").alias("dst"),
+            )
+            nodes = (
+                g.select(F.col("src").alias("node"))
+                .unionByName(g.select(F.col("dst").alias("node")))
+                .distinct()
+            )
+            ranks = pagerank(g, nodes, iterations=cfg.pagerank_iterations)
+            self._rank_cache = (basis, ranks)
+        boost = (
+            F.least(
+                F.coalesce(F.col("pagerank_scaled"), F.lit(0).cast("long")),
+                F.lit(SCALE - 1).cast("long"),
+            ).cast("double")
+            / F.lit(float(SCALE))
         )
-        cand = self._with_maybe_seen(cand, n_parts=py_parts).persist()
+        return (
+            cand.join(ranks.withColumnRenamed("node", "url_hash"), "url_hash", "left")
+            .withColumn("priority", F.col("priority") - boost)
+            .drop("pagerank_scaled")
+        )
+
+    def _seen(self, st: _Round) -> None:
+        """A3 Bloom prefilter → A2 exact anti-join backstop → S5 seen
+        append. The probe is co-partitioned with the sidecar blobs by
+        host_hash and cached so both branches read one materialization."""
+        rnd = st.rnd
+        cand = st.keep(self._with_maybe_seen(st.cand, n_parts=st.py_parts))
         definitely_new = cand.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = cand.filter(F.col("maybe_seen")).drop("maybe_seen")
         seen = self.storage.read_table("seen", upto_round=rnd - 1).select(
             "host_hash", "url_hash"
         )
         confirmed_new = maybe.join(seen, ["host_hash", "url_hash"], "left_anti")
-        new = definitely_new.unionByName(confirmed_new).select(*FRONTIER_COLS).persist()
-
-        # S5 seen append + A5 sidecar fold
-        seen_add = new.select(
+        st.new = st.keep(
+            definitely_new.unionByName(confirmed_new).select(*FRONTIER_COLS)
+        )
+        st.seen_add = st.new.select(
             "url_hash", "url_canon", "host_hash",
             F.lit(rnd).alias("first_round"),
         )
-        self.storage.write_round("seen", seen_add, rnd)
-        tick("seen_antijoin_write")
+        self.storage.write_round("seen", st.seen_add, rnd)
 
+    def _tail(self, st: _Round) -> None:
+        """G1 final sinks as concurrent jobs: everything here reads
+        materialized caches, so the documents, next-frontier and metrics
+        appends, the Bloom fold with its filter checkpoint, and the fused
+        round-counter job run side by side (driver-side pipelining)."""
+        rnd = st.rnd
+        # S3 documents append (contract schema + bookkeeping)
+        docs = (
+            st.fetched.withColumn("spans", F.expr(_SPANS_EXPR))
+            .withColumn("content_sha2", F.sha2(F.to_json(F.col("spans")), 256))
+            .select(
+                F.col("url_canon").alias("doc_id"),
+                "spans",
+                "url_hash",
+                "host",
+                "host_hash",
+                "depth",
+                "fetch_time",
+                "host_rank",
+                "status",
+                "content_sha2",
+            )
+        )
         # U1: next frontier snapshot = deferred ∪ banned-deferred ∪ new
         next_frontier = (
-            deferred.select(*FRONTIER_COLS)
-            .unionByName(banned_deferred.select(*FRONTIER_COLS))
-            .unionByName(new.select(*FRONTIER_COLS))
+            st.deferred.select(*FRONTIER_COLS)
+            .unionByName(st.banned_deferred.select(*FRONTIER_COLS))
+            .unionByName(st.new.select(*FRONTIER_COLS))
         )
-        # G1 metrics + final sinks: everything below reads materialized
-        # caches, so the frontier write, the metrics write and the lagging
-        # counters run as concurrent jobs (driver-side pipelining again).
-        # candidates/new/deferred counts are ONE tagged-union job over three
-        # cached dataframes, not three jobs — per-round driver actions are
-        # real fixed cost in local mode and pure overhead at small rounds.
-        metrics_df = self._metrics_df(rnd, fetched, disallowed, deferred, new)
+        metrics_df = self._metrics_df(
+            rnd, st.fetched, st.disallowed, st.deferred, st.new
+        )
 
-        def _fold_and_save() -> None:
+        def fold_and_save() -> None:
             # A5 sidecar fold + filter checkpoint. Folds straight from the
             # cached `new` frame (seen_add reads the cache the seen write
-            # above materialized) — re-reading the just-written seen parquet
+            # materialized) — re-reading the just-written seen parquet
             # would pay disk+decode for rows already in block storage; at
             # cluster scale that read-back is a full extra scan per round.
-            self._fold_into_bloom(seen_add, rnd, n_parts=py_parts)
-            self.storage.save_filters(
-                rnd, dict(self._bloom_index), self.cuckoo.to_bytes()
-            )
-
-        def _round_stats() -> None:
-            # ALL of the round's counters in ONE tagged-union aggregation job
-            # over five cached frames (round-2 ran three separate jobs:
-            # admission stats, fetch stats, lagging counts). Per-round driver
-            # actions are real fixed cost in local mode and at small rounds;
-            # every branch reads an already-materialized cache, the union
-            # does partial (map-side) aggregation per branch, and the final
-            # agg is one row.
-            def tag(df, k, **cols):
-                return df.select(
-                    F.lit(k).alias("k"),
-                    cols.get("u", F.lit(None).cast("long")).alias("u"),
-                    cols.get("h", F.lit(None).cast("string")).alias("h"),
-                    cols.get("b", F.lit(None).cast("boolean")).alias("b"),
-                    cols.get("a", F.lit(None).cast("boolean")).alias("a"),
-                    cols.get("s", F.lit(None).cast("int")).alias("s"),
-                )
-
-            u = (
-                tag(fr, "fr", u=F.col("url_hash"), h=F.col("host"),
-                    b=F.col("is_banned"), a=F.col("is_allowed"))
-                .unionByName(tag(fetched, "fet", s=F.col("status")))
-                .unionByName(
-                    tag(edges.filter(F.col("p_depth") + 1 <= cfg.max_depth),
-                        "cand")
-                )
-                .unionByName(tag(new, "new"))
-                .unionByName(
-                    tag(ranked.filter(F.col("host_rank") > F.col("host_budget")),
-                        "def")
-                )
-            )
-            is_fr = F.col("k") == "fr"
-            is_fet = F.col("k") == "fet"
-            st = u.agg(
-                F.sum(is_fr.cast("long")).alias("n_fr"),
-                F.sum((is_fr & F.col("b")).cast("long")).alias("banned"),
-                F.sum(
-                    (is_fr & ~F.col("b") & ~F.col("a")).cast("long")
-                ).alias("disallowed"),
-                # A6: frontier cardinality estimates (HLL) — sizes the Bloom
-                # sidecars at scale; the sketch ignores the other branches'
-                # NULLs, so values match a frontier-only aggregation exactly
-                F.approx_count_distinct(
-                    F.when(is_fr, F.col("u"))
-                ).alias("distinct_est"),
-                F.approx_count_distinct(F.when(is_fr, F.col("h"))).alias(
-                    "hosts_est"
-                ),
-                F.sum(is_fet.cast("long")).alias("fetched"),
-                F.sum((is_fet & (F.col("s") == 200)).cast("long")).alias("ok"),
-                F.sum((F.col("k") == "cand").cast("long")).alias("cand"),
-                F.sum((F.col("k") == "new").cast("long")).alias("new"),
-                F.sum((F.col("k") == "def").cast("long")).alias("deferred"),
-            ).first()
-            m.frontier_size = int(st["n_fr"])
-            m.skipped_banned = int(st["banned"] or 0)
-            m.skipped_robots = int(st["disallowed"] or 0)
-            m.extras["frontier_distinct_est"] = int(st["distinct_est"])
-            m.extras["frontier_hosts_est"] = int(st["hosts_est"])
-            m.fetched = int(st["fetched"])
-            m.ok_200 = int(st["ok"] or 0)
-            m.candidates = int(st["cand"])
-            m.new_urls = int(st["new"])
-            m.skipped_politeness = int(st["deferred"])
+            self._fold_into_bloom(st.seen_add, rnd, n_parts=st.py_parts)
+            self._save_filters(rnd)
 
         _parallel(
             lambda: self.storage.write_round("documents", docs, rnd),
-            _fold_and_save,
+            fold_and_save,
             lambda: self.storage.write_round("frontier", next_frontier, rnd),
             lambda: self.storage.write_round(
                 "metrics", metrics_df, rnd, cluster_by=None, num_files=1
             ),
-            _round_stats,
+            lambda: self._round_stats(st),
         )
-        m.deduped = m.candidates - m.new_urls
-        tick("tail_parallel_sinks")
+        st.m.deduped = st.m.candidates - st.m.new_urls
+
+    def _round_stats(self, st: _Round) -> None:
+        """ALL of the round's counters in ONE tagged-union aggregation job
+        over five frames that read materialized caches (round-2 ran three
+        separate jobs: admission stats, fetch stats, lagging counts).
+        Per-round driver actions are real fixed cost in local mode and at
+        small rounds; the union does partial (map-side) aggregation per
+        branch, and the final agg is one row."""
+        def tag(df, k, **cols):
+            return df.select(
+                F.lit(k).alias("k"),
+                cols.get("u", F.lit(None).cast("long")).alias("u"),
+                cols.get("h", F.lit(None).cast("string")).alias("h"),
+                cols.get("b", F.lit(None).cast("boolean")).alias("b"),
+                cols.get("a", F.lit(None).cast("boolean")).alias("a"),
+                cols.get("s", F.lit(None).cast("int")).alias("s"),
+            )
+
+        u = (
+            tag(st.fr, "fr", u=F.col("url_hash"), h=F.col("host"),
+                b=F.col("is_banned"), a=F.col("is_allowed"))
+            .unionByName(tag(st.fetched, "fet", s=F.col("status")))
+            .unionByName(tag(st.linked, "cand"))
+            .unionByName(tag(st.new, "new"))
+            .unionByName(tag(st.deferred, "def"))
+        )
+        is_fr = F.col("k") == "fr"
+        is_fet = F.col("k") == "fet"
+        row = u.agg(
+            F.sum(is_fr.cast("long")).alias("n_fr"),
+            F.sum((is_fr & F.col("b")).cast("long")).alias("banned"),
+            F.sum(
+                (is_fr & ~F.col("b") & ~F.col("a")).cast("long")
+            ).alias("disallowed"),
+            # A6: frontier cardinality estimates (HLL) — sizes the Bloom
+            # sidecars at scale; the sketch ignores the other branches'
+            # NULLs, so values match a frontier-only aggregation exactly
+            F.approx_count_distinct(
+                F.when(is_fr, F.col("u"))
+            ).alias("distinct_est"),
+            F.approx_count_distinct(F.when(is_fr, F.col("h"))).alias(
+                "hosts_est"
+            ),
+            F.sum(is_fet.cast("long")).alias("fetched"),
+            F.sum((is_fet & (F.col("s") == 200)).cast("long")).alias("ok"),
+            F.sum((F.col("k") == "cand").cast("long")).alias("cand"),
+            F.sum((F.col("k") == "new").cast("long")).alias("new"),
+            F.sum((F.col("k") == "def").cast("long")).alias("deferred"),
+        ).first()
+        m = st.m
+        m.frontier_size = int(row["n_fr"])
+        m.skipped_banned = int(row["banned"] or 0)
+        m.skipped_robots = int(row["disallowed"] or 0)
+        m.extras["frontier_distinct_est"] = int(row["distinct_est"])
+        m.extras["frontier_hosts_est"] = int(row["hosts_est"])
+        m.fetched = int(row["fetched"])
+        m.ok_200 = int(row["ok"] or 0)
+        m.candidates = int(row["cand"])
+        m.new_urls = int(row["new"])
+        m.skipped_politeness = int(row["deferred"])
+
+    def _commit(self, st: _Round) -> None:
+        """The atomic manifest commit, the round's only commit point."""
+        m = st.m
         # next snapshot size is already known arithmetically — no read-back job
         next_size = m.skipped_politeness + m.new_urls + (
-            m.skipped_banned if cfg.unban_round is not None else 0
+            m.skipped_banned if self.cfg.unban_round is not None else 0
         )
-        prev = self.storage.manifest(rnd - 1) or {}
-        totals = dict(prev.get("totals", {}))
+        totals = dict(st.prev.get("totals", {}))
         totals["seen"] = totals.get("seen", 0) + m.new_urls
         totals["fetched"] = totals.get("fetched", 0) + m.fetched
         self.storage.commit_manifest(
-            rnd,
+            st.rnd,
             {
                 "frontier_size": m.frontier_size,
                 "next_frontier_size": next_size,
@@ -952,13 +971,17 @@ class CrawlEngine:
                 "totals": totals,
             },
         )
+        m.extras["next_frontier_size"] = next_size
+
+    def _maintain(self, st: _Round) -> None:
+        """Post-commit storage upkeep (compaction and expiry are no-ops
+        unless configured): it only rewrites or reclaims storage layout —
+        table contents, crawl state and resume points are unchanged, so a
+        crash anywhere in here re-runs nothing and corrupts nothing."""
+        cfg, rnd = self.cfg, st.rnd
         # GC superseded Bloom blob rounds now that the manifest (and the
         # filter pickle carrying this round's index) is committed.
         self.storage.gc_bloom_rounds(self._bloom_index)
-        # Post-commit table maintenance (both no-ops unless configured):
-        # everything below this line only rewrites/reclaims storage layout —
-        # table contents, crawl state and resume points are unchanged, so a
-        # crash anywhere in here re-runs nothing and corrupts nothing.
         if cfg.compact_seen_every and rnd % cfg.compact_seen_every == 0:
             self.storage.compact_table("seen", upto_round=rnd)
             # pagerank priority re-reads the edges-so-far table each basis
@@ -970,12 +993,6 @@ class CrawlEngine:
                 self.storage.compact_table("edges", upto_round=rnd)
         if cfg.expire_frontier:
             self.storage.expire_frontier_snapshots(keep_upto=rnd)
-        m.extras["next_frontier_size"] = next_size
-        m.extras["timings"] = timings
-        for df in (fr, ranked, fetched, edges, cand, new):
-            df.unpersist()
-        self.history.append(m)
-        return m
 
     def _metrics_df(self, rnd, fetched, disallowed, deferred, new) -> DataFrame:
         """S7: per-partition (host-hash bucket) lineage counters. One union +
@@ -1013,18 +1030,12 @@ class CrawlEngine:
             start = 1
         else:
             start = latest["round"] + 1
-            state = self.storage.load_filters(latest["round"])
-            self._bloom_index = {
-                int(b): int(r) for b, r in state["bloom_index"].items()
-            }
-            self.cuckoo = CuckooFilter.from_bytes(state["cuckoo"])
+            self._load_filters(latest["round"])
 
         rounds_run = 0
         last = start - 1
         for rnd in range(start, self.cfg.max_rounds + 1):
-            prev = self.storage.manifest(rnd - 1)
-            size = prev.get("next_frontier_size", prev.get("frontier_size", 0))
-            if size == 0:
+            if _next_frontier_size(self.storage.manifest(rnd - 1)) == 0:
                 break
             m = self.run_round(rnd)
             rounds_run += 1
@@ -1036,7 +1047,7 @@ class CrawlEngine:
             "rounds": last,
             "rounds_run_this_session": rounds_run,
             "totals": final.get("totals", {}),
-            "exhausted": (final.get("next_frontier_size", final.get("frontier_size", 1)) == 0),
+            "exhausted": _next_frontier_size(final, default=1) == 0,
         }
 
 

@@ -11,7 +11,9 @@ and url_hash-keyed dedup window are the mechanisms under test.
 
 Per-round tables print for BASELINE.md; the balanced run's per-round
 numbers must be bit-identical to the round-2 recorded table (engine
-refactors change wall time, never results).
+refactors change wall time, never results). That table was recorded at the
+default 10,000 hosts / 25,000 seeds, so the bit-identity holds only at that
+size: other ``--hosts``/``--seeds`` values crawl a different web.
 
 ``--hosts``/``--seeds`` scale the synthetic web another order of magnitude
 with the identical plan/config shape (``--hosts 100000 --seeds 250000``
@@ -55,6 +57,15 @@ def make_spark(cores: int):
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
+
+
+def positive_int(text: str) -> int:
+    """argparse type: an integer >= 1, so a bad size is rejected at parse
+    time (exit status 2) instead of failing inside the synthetic web."""
+    value = int(text)  # ValueError -> argparse's "invalid value" message
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be a positive integer, got {text!r}")
+    return value
 
 
 def run_demo(
@@ -143,9 +154,9 @@ def main() -> None:
     # order-of-magnitude sweep knobs: 10x both (--hosts 100000 --seeds
     # 250000) crawls ~10^7 URLs with the identical plan/config shape, so
     # per-URL cost can be compared across 10^5 / 10^6 / 10^7 round sizes
-    ap.add_argument("--hosts", type=int, default=10_000,
+    ap.add_argument("--hosts", type=positive_int, default=10_000,
                     help="synthetic-web host count (URL space scales with it)")
-    ap.add_argument("--seeds", type=int, default=25_000,
+    ap.add_argument("--seeds", type=positive_int, default=25_000,
                     help="seed-list size")
     ap.add_argument(
         "--maintenance",

@@ -6,6 +6,8 @@ declared."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -231,7 +233,9 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     the Bloom sidecar from the cached new-URLs frame (no seen read-back), and
     overlaps the tail sinks — 13 jobs/round measured. This pins the budget
     (<=14) and flatness (round k and k+1 identical), so an accidental extra
-    .count()/.collect() in the hot loop fails loudly."""
+    .count()/.collect() in the hot loop fails loudly. Bootstrap (9 jobs)
+    and an 8-URL seed injection (11 jobs) are pinned the same way: both
+    build their frontier through one seed-frontier path."""
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import CrawlEngine
     from crawlspark.sources import synthweb
@@ -240,7 +244,6 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     cfg = CrawlConfig(max_depth=2, max_rounds=3, web_hosts=6,
                       shuffle_partitions=4)
     eng = CrawlEngine(spark, cfg, CrawlStorage(spark, tmp_path))
-    eng.bootstrap(synthweb.seed_list(cfg, n=20))
 
     # The DAGScheduler's job-id counter sees jobs from ALL threads (the
     # tail sinks run in a thread pool, so thread-local job groups would
@@ -250,13 +253,33 @@ def test_round_driver_job_count_is_flat_and_bounded(spark, tmp_path):
     def n_jobs() -> int:
         return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
+    nb = n_jobs()
+    eng.bootstrap(synthweb.seed_list(cfg, n=20))
     n0 = n_jobs()
-    eng.run_round(1)
+    assert n0 - nb <= 9, f"bootstrap launched {n0-nb} driver jobs (budget 9)"
+    t0 = time.perf_counter()
+    m1 = eng.run_round(1)
+    wall = time.perf_counter() - t0
     n1 = n_jobs()
     eng.run_round(2)
     n2 = n_jobs()
     assert n1 - n0 == n2 - n1, f"per-round job count not flat: {n1-n0} vs {n2-n1}"
     assert n1 - n0 <= 14, f"round launched {n1-n0} driver jobs (budget 14)"
+
+    # the round is its named phases, in pipeline order, each timed once
+    timings = m1.extras["timings"]
+    assert list(timings) == ["admit", "rank", "fetch", "candidates", "seen",
+                             "tail", "commit", "maintain"]
+    assert all(t >= 0 for t in timings.values())
+    assert sum(timings.values()) <= wall
+
+    # seed injection shares bootstrap's seed-frontier path: no extra jobs
+    inj = eng.inject_seeds(
+        [f"http://host{i % 6:02d}.example/injected/p{i}" for i in range(8)]
+    )
+    n3 = n_jobs()
+    assert inj["injected"] == 8
+    assert n3 - n2 <= 11, f"inject_seeds launched {n3-n2} driver jobs (budget 11)"
 
 
 def test_pagerank_priority_jobs_are_flat(spark, tmp_path):
