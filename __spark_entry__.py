@@ -60,7 +60,11 @@ def entry(spark: SparkSession) -> DataFrame:
         ).alias("url"),
         F.col("doc_id").alias("seed_pos"),
     )
-    fr = seeds.withColumn("url_canon", canonicalize_udf()(F.col("url"))).filter(
+    # Nondeterministic keeps the isNotNull filter above the projection, so
+    # the UDF runs once; a deterministic UDF's filter is pushed below it and
+    # the plan evaluates the UDF twice.
+    canon = canonicalize_udf().asNondeterministic()
+    fr = seeds.withColumn("url_canon", canon(F.col("url"))).filter(
         F.col("url_canon").isNotNull()
     )
     fr = with_url_identity(fr, num_buckets=cfg.num_host_buckets)
@@ -606,9 +610,10 @@ _ROBOTS_PATH_EXPR = (
 
 
 def q_robots_match(spark, sf_dir):
-    """R3/R2 prefix-rule subset through the ENGINE's allowed() (the same
-    function the crawl admission path and the sequential oracle share —
-    crawlspark/functions/robots.py); the oracle expresses RFC 9309
+    """R3/R2 prefix-rule subset through the scalar allowed() the sequential
+    oracle uses (crawlspark/functions/robots.py), wrapped in a pandas UDF;
+    the crawl's admission matches with the JVM expression that module
+    tests against allowed(). The oracle expresses RFC 9309
     longest-prefix-match (ties impossible: rule lengths are distinct) in
     ANSI SQL over the same derived path column."""
     from crawlspark.functions.robots import allowed

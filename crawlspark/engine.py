@@ -4,8 +4,8 @@ One driver loop iteration = one crawl round. ``run_round`` runs it as an
 ordered list of phase methods; each bracketed stage is run by the method
 named beside it:
 
-  _admit       frontier snapshot → [cuckoo ban prefilter → broadcast robots
-               join → robots path match]
+  _admit       frontier snapshot → [broadcast robots join → ban flag from
+               the driver's per-host cuckoo probe → JVM robots path match]
   _rank        [per-host priority ranking → crawl-delay budget admission]
   _fetch       [salted repartition → mapInPandas fetch/parse] → edges append
   _candidates  [canonicalized extracted links → priority policy →
@@ -49,14 +49,15 @@ import time
 from dataclasses import dataclass, field
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crawlspark.config import BLOOM_FP_RATE, CrawlConfig
 from crawlspark.filters import CuckooFilter
-from crawlspark.functions.canon import canonicalize_udf, with_url_identity
-from crawlspark.functions.robots import allowed_series, path_of
+from crawlspark.functions.canon import canonicalize_series, with_url_identity
+from crawlspark.functions.robots import allowed_expr, compile_rules, path_expr
 from crawlspark.sources import synthweb
 from crawlspark.storage import CrawlStorage
 
@@ -222,10 +223,26 @@ class CrawlEngine:
         # or cache loss recomputes the identical frame.
         self._rank_cache: tuple[int, DataFrame] | None = None
         # A6 frontier cardinality estimate of the previous round (sizes new
-        # Bloom buckets) and the round-invariant robots dimension (built on
-        # first use).
+        # Bloom buckets).
         self._last_distinct_est = 0
-        self._robots_cached: DataFrame | None = None
+        # Built once from the robots table: the broadcast robots dimension
+        # (rules compiled for the JVM matcher) and the cuckoo key of each
+        # host whose exact ban flag is set (A4). Driver-local frames go
+        # through Arrow, a LocalTableScan; a list of Rows would scan a
+        # Python RDD, running Python tasks in every job that reads it.
+        robots = synthweb.robots_table(cfg)
+        self._robots = spark.createDataFrame(
+            pa.Table.from_pylist(
+                [{**r, "rules": compile_rules(r["rules"])} for r in robots]
+            ),
+            "host string, rules array<struct<allow:boolean,prefix:string,"
+            "regex:string>>, crawl_delay double, banned boolean",
+        )
+        self._banned_hosts = {
+            r["host"]: _signed64(synthweb.stable_hash("host:" + r["host"], cfg.seed))
+            for r in robots
+            if r["banned"]
+        }
 
     def _bloom_capacity(self) -> int:
         """Per-bucket Bloom capacity, sized from the A6 cardinality estimate
@@ -238,6 +255,11 @@ class CrawlEngine:
         §2.3 exactness invariant)."""
         per_bucket = -(-self._last_distinct_est * 4 // max(1, self.cfg.num_host_buckets))
         return max(1 << 16, per_bucket)
+
+    def _need(self, n_rows: int) -> int:
+        """Partitions ``n_rows`` rows fill at a quarter of
+        ``fetch_rows_per_partition`` each."""
+        return -(-n_rows * 4 // self.cfg.fetch_rows_per_partition)
 
     def _py_parts(self, *caps: int) -> int:
         """Width of a Python stage keyed by host bucket: at least 4 tasks,
@@ -255,55 +277,34 @@ class CrawlEngine:
     def _save_filters(self, rnd: int) -> None:
         self.storage.save_filters(rnd, dict(self._bloom_index), self.cuckoo.to_bytes())
 
-    # ------------------------------------------------------------ robots
-    def _robots_df(self) -> DataFrame:
-        """Robots dim is round-invariant for a given config: build the
-        DataFrame once and reuse (the per-round rebuild re-ran the python
-        rule-table conversion and re-planned the broadcast every round)."""
-        if self._robots_cached is not None:
-            return self._robots_cached
-        rows = synthweb.robots_table(self.cfg)
-        schema = T.StructType(
-            [
-                T.StructField("host", T.StringType()),
-                T.StructField(
-                    "rules",
-                    T.ArrayType(
-                        T.StructType(
-                            [
-                                T.StructField("allow", T.BooleanType()),
-                                T.StructField("prefix", T.StringType()),
-                            ]
-                        )
-                    ),
-                ),
-                T.StructField("crawl_delay", T.DoubleType()),
-                T.StructField("banned", T.BooleanType()),
-            ]
-        )
-        self._robots_cached = self.spark.createDataFrame(rows, schema)
-        return self._robots_cached
-
-    def _banned_hosts(self) -> list[str]:
-        return [r["host"] for r in synthweb.robots_table(self.cfg) if r["banned"]]
-
+    # -------------------------------------------------------------- bans
     def _refresh_cuckoo(self, rnd: int) -> None:
         """A4: deletable politeness bans. Hosts banned in the robots fixture
         are inserted at bootstrap; from ``cfg.unban_round`` on they are
         *deleted* (the operation a Bloom filter cannot do), after which their
         URLs become eligible again. The exact ban state is
         ``robots.banned AND rnd < unban_round``; the cuckoo filter mirrors it
-        and serves as the broadcastable executor-side prefilter."""
+        (``_banned_now`` probes it)."""
         if rnd == 0:
-            for h in self._banned_hosts():
-                self.cuckoo.insert(_signed64(synthweb.stable_hash("host:" + h, self.cfg.seed)))
+            for key in self._banned_hosts.values():
+                self.cuckoo.insert(key)
         elif (
             self.cfg.unban_round is not None
             and rnd >= self.cfg.unban_round
             and self.cuckoo.n_items > 0
         ):
-            for h in self._banned_hosts():
-                self.cuckoo.delete(_signed64(synthweb.stable_hash("host:" + h, self.cfg.seed)))
+            for key in self._banned_hosts.values():
+                self.cuckoo.delete(key)
+
+    def _banned_now(self, rnd: int) -> list[str]:
+        """Hosts banned in round ``rnd``: the cuckoo filter probed on the
+        driver once per host whose exact ban flag is set, so the truth table
+        is ``cuckoo ∧ banned ∧ bans_active`` and a false positive never
+        bans."""
+        if self.cfg.unban_round is not None and rnd >= self.cfg.unban_round:
+            return []
+        hits = self.cuckoo.contains_many(list(self._banned_hosts.values()))
+        return [h for h, hit in zip(self._banned_hosts, hits) if hit]
 
     def _with_maybe_seen(self, cand: DataFrame, n_parts: int | None = None) -> DataFrame:
         """A3 Bloom prefilter, partition-addressable: candidates are
@@ -358,48 +359,17 @@ class CrawlEngine:
         parts = n_parts or self._py_parts()
         return cand.repartition(parts, "host_hash").mapInPandas(probe, out_schema)
 
-    def _admission_flags_udf(self):
-        """Fused A4 cuckoo ban probe + R2 robots path match: one Arrow
-        crossing per batch instead of two (SURVEY.md §4, UDF fusion)."""
-        blob = self.cuckoo.to_bytes()
-        bc = self.spark.sparkContext.broadcast(blob)
-        seed = self.cfg.seed
-
-        @F.pandas_udf("struct<maybe_banned:boolean,allowed:boolean>")
-        def _flags(
-            host: pd.Series, url_canon: pd.Series, rules: pd.Series
-        ) -> pd.DataFrame:
-            import numpy as np
-
-            f = CuckooFilter.from_bytes(bc.value)
-            keys = np.fromiter(
-                (
-                    _signed64(synthweb.stable_hash("host:" + (h or ""), seed))
-                    for h in host
-                ),
-                dtype=np.int64,
-                count=len(host),
-            )
-            banned = pd.Series(f.contains_many(keys), index=host.index)
-            paths = url_canon.map(lambda u: path_of(u) if u else "/")
-            return pd.DataFrame(
-                {"maybe_banned": banned, "allowed": allowed_series(paths, rules)}
-            )
-
-        return _flags
-
     # --------------------------------------------------------- bootstrap
     def _seed_frontier(self, seeds: list[str], rnd: int) -> DataFrame:
-        """Seed URLs → frontier rows discovered in round ``rnd``: canonical,
-        at depth 0 / priority 0.0, first-wins deduped by seed position."""
-        seeds_df = self.spark.createDataFrame(
-            [(u, i) for i, u in enumerate(seeds)], "url string, seed_pos int"
-        )
-        canon = canonicalize_udf()
-        fr = (
-            seeds_df.withColumn("url_canon", canon("url"))
-            .filter(F.col("url_canon").isNotNull())
-        )
+        """Seed URLs → frontier rows discovered in round ``rnd``: canonical
+        (on the driver), at depth 0 / priority 0.0, first-wins deduped by
+        seed position."""
+        urls = pd.Series(seeds, dtype="object")
+        cols = {"url": urls, "seed_pos": range(len(seeds)),
+                "url_canon": canonicalize_series(urls)}
+        fr = self.spark.createDataFrame(
+            pa.table(cols), "url string, seed_pos int, url_canon string"
+        ).filter(F.col("url_canon").isNotNull())
         fr = with_url_identity(fr, num_buckets=self.cfg.num_host_buckets)
         fr = (
             fr.withColumn("depth", F.lit(0))
@@ -420,8 +390,11 @@ class CrawlEngine:
             "url_hash", "url_canon", "host_hash", F.lit(0).alias("first_round")
         )
         self.storage.write_round("seen", seen0, 0)
-        # A5: Bloom sidecar from round-0 seen
-        self._fold_into_bloom(self.storage.read_round("seen", 0), 0)
+        # A5: Bloom sidecar from round-0 seen, sized from the seed count
+        self._fold_into_bloom(
+            self.storage.read_round("seen", 0), 0,
+            n_parts=self._py_parts(self._need(len(seeds))),
+        )
         self._refresh_cuckoo(0)
         self._save_filters(0)
         n = self.storage.read_round("frontier", 0).count()
@@ -474,7 +447,10 @@ class CrawlEngine:
         )
         self.storage.write_round("seen", seen_add, rnd)
         n_new = self.storage.read_round("seen", rnd).count()
-        self._fold_into_bloom(self.storage.read_round("seen", rnd), rnd)
+        self._fold_into_bloom(
+            self.storage.read_round("seen", rnd), rnd,
+            n_parts=self._py_parts(self._need(len(seeds))),
+        )
         self._save_filters(rnd)
         prev_size = _next_frontier_size(latest)
         totals = dict(latest.get("totals", {}))
@@ -586,33 +562,23 @@ class CrawlEngine:
         # this round, and caps the bucket-keyed Python stages (Bloom probe
         # and fold) the same way; results are partition-count invariant
         # (pinned by the cross-parallelism determinism tests).
-        need = -(-st.approx * 4 // cfg.fetch_rows_per_partition)
+        need = self._need(st.approx)
         round_parts = max(8, min(cfg.shuffle_partitions, need))
         self.spark.conf.set("spark.sql.shuffle.partitions", str(round_parts))
         st.py_parts = self._py_parts(need)
 
         self._refresh_cuckoo(rnd)  # unban (cuckoo delete) takes effect here
-        fr = frontier.join(F.broadcast(self._robots_df()), "host", "left")
+        fr = frontier.join(F.broadcast(self._robots), "host", "left")
         fr = fr.withColumn("crawl_delay", F.coalesce("crawl_delay", F.lit(1.0)))
 
-        # A4 cuckoo ban prefilter + R2 robots path match, fused into one
-        # Arrow crossing. The exact ban state (robots.banned AND the unban
-        # clock) backstops the cuckoo, so a false positive never bans.
-        bans_active = cfg.unban_round is None or rnd < cfg.unban_round
-        fr = fr.withColumn(
-            "_flags", self._admission_flags_udf()("host", "url_canon", "rules")
-        )
+        # A4 ban flag (a per-host fact, probed on the driver) and R2 robots
+        # path match, both JVM expressions: admission crosses into no Python.
+        is_banned = F.coalesce(F.col("host").isin(self._banned_now(rnd)), F.lit(False))
         fr = st.fr = st.keep(
-            fr.withColumn(
-                "is_banned",
-                F.col("_flags.maybe_banned")
-                & F.coalesce("banned", F.lit(False))
-                & F.lit(bans_active),
-            )
-            .withColumn(
-                "is_allowed", F.coalesce(F.col("_flags.allowed"), F.lit(True))
-            )
-            .drop("_flags")
+            fr.withColumn("is_banned", is_banned)
+            .withColumn("_path", path_expr(F.col("url_canon")))
+            .withColumn("is_allowed", allowed_expr(F.col("_path"), F.col("rules")))
+            .drop("_path")
         )
         # Stats over this frame are NOT computed here: all of the round's
         # counters fold into ONE tagged-union aggregation job (_round_stats)

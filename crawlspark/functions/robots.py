@@ -4,18 +4,17 @@ Semantics: RFC 9309 longest-prefix match — among all rules whose prefix
 matches the URL path, the longest prefix wins; ties prefer Allow; no match →
 allowed. [typical — SURVEY.md §0.1 item 4; the reference checkout was empty.]
 
-The matcher is one pure function (`allowed`) shared by the sequential oracle,
-plus a pandas-vectorized batch form (`allowed_series`) used inside the Spark
-engine after the broadcast robots join (R1): rules arrive as the joined
-``rules`` array column, one Arrow batch at a time. Host budgets (P3) are pure
-column expressions (JVM-side) and live in scheduler.py.
+The sequential oracle matches with the pure function `allowed`; the Spark
+engine matches in the JVM, tested equal to it. `compile_rules` gives each
+``*``/``$`` pattern a Java regex once, as the broadcast robots dimension
+is built (R1); `allowed_expr` is the longest match over the joined
+``rules`` as one ``aggregate`` and `path_expr` is `path_of`, both column
+expressions. Host budgets (P3) are JVM-side too and live in scheduler.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
-__all__ = ["allowed", "allowed_series", "path_of"]
+__all__ = ["allowed", "allowed_expr", "compile_rules", "path_expr", "path_of"]
 
 
 def path_of(url_canon: str) -> str:
@@ -87,20 +86,54 @@ def allowed(path: str, rules) -> bool:
     return best_allow
 
 
-def allowed_series(paths: pd.Series, rules_col: pd.Series) -> pd.Series:
-    """Vectorized batch form: most hosts carry the single catch-all
-    ``[{allow:True, prefix:'/'}]`` rule — detected once per batch and
-    short-circuited; only multi-rule hosts pay the per-row match."""
-    n = len(paths)
-    out = pd.Series(True, index=paths.index)
-    trivial = rules_col.map(
-        lambda rs: rs is None
-        or (len(rs) == 1 and bool(rs[0]["allow"]) and rs[0]["prefix"] == "/")
+def _java_regex(pattern: str | None) -> str | None:
+    """Java regex of a ``*``/``$`` pattern (None for a plain prefix): quoted
+    literal segments joined by ``.*`` after ``(?s)\\A`` (DOTALL: ``*``
+    spans any character), ending in ``\\z`` for a trailing ``$``."""
+    if pattern is None or ("*" not in pattern and not pattern.endswith("$")):
+        return None
+    anchored = pattern.endswith("$")
+    segs = (pattern[:-1] if anchored else pattern).split("*")
+    quoted = ".*".join("\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E" for s in segs)
+    return "(?s)\\A" + quoted + ("\\z" if anchored else "")
+
+
+def compile_rules(rules) -> list[dict] | None:
+    """A host's rules as the robots dimension stores them, each with its `_java_regex`."""
+    return None if rules is None else [{**r, "regex": _java_regex(r["prefix"])} for r in rules]
+
+
+# ---------------------------------------------------------------------------
+# Spark surface — imported lazily so the oracle can import this module JVM-free
+# ---------------------------------------------------------------------------
+
+def path_expr(url):
+    """`path_of` as a JVM column expression over a canonical URL column; a
+    NULL or empty URL gives "/"."""
+    from pyspark.sql import functions as F
+
+    path = F.regexp_extract(url, r"(?s)^.*?://[^/]*(/.*)?", 1)
+    return F.coalesce(F.nullif(path, F.lit("")), F.lit("/"))
+
+
+def allowed_expr(path, rules):
+    """`allowed` as one JVM ``aggregate`` over a compiled ``rules`` column
+    (`compile_rules`), keeping the (length, allow) of the longest match."""
+    from pyspark.sql import functions as F
+
+    def step(best, r):
+        n = F.length(r["prefix"])
+        allow = F.coalesce(r["allow"], F.lit(False))
+        hit = F.when(r["regex"].isNull(), F.startswith(path, r["prefix"])).otherwise(
+            F.regexp_like(path, r["regex"])
+        )
+        wins = (n > best["n"]) | ((n == best["n"]) & allow)
+        return F.when(
+            r["prefix"].isNotNull() & hit & wins,
+            F.struct(n.alias("n"), allow.alias("allow")),
+        ).otherwise(best)
+
+    none = F.struct(F.lit(-1).alias("n"), F.lit(True).alias("allow"))
+    return F.coalesce(
+        F.aggregate(rules, none, step, lambda best: best["allow"]), F.lit(True)
     )
-    idx = out.index[~trivial]
-    if len(idx):
-        out.loc[idx] = [
-            allowed(p, rs)
-            for p, rs in zip(paths.loc[idx], rules_col.loc[idx])
-        ]
-    return out if n else pd.Series(dtype=bool)

@@ -6,7 +6,9 @@ declared."""
 
 from __future__ import annotations
 
+import re
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +20,86 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+_PY_NODES = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+_TREE_NODE = re.compile(r"^(?P<pre>[ :|+-]*)(?:\* )?(?P<name>\w+).*\((?P<id>\d+)\)$")
+_DETAIL = re.compile(r"^\((\d+)\) [^\n]*(?:\n(.*?))??(?=\n\n|\Z)", re.S | re.M)
+
+
+def _python_runs(plans: list[str], cached: set[str]) -> Counter:
+    """How often the writes planned by ``plans`` run each Python operator,
+    keyed by (operator, Python function). An operator under a cached
+    relation runs once, whichever writes read the cache (``cached`` holds
+    the ones already counted, by their plan arguments, which carry the
+    cached plan's expression ids); any other runs once per write that plans
+    it."""
+    runs: Counter = Counter()
+    for plan in plans:
+        tree, _, details = plan.partition("\n\n\n")
+        args = {int(m[1]): m[2] or "" for m in _DETAIL.finditer(details)}
+        open_nodes: list[tuple[int, bool]] = []  # (indent, under a cache)
+        for line in tree.splitlines()[1:]:
+            m = _TREE_NODE.match(line)
+            if m is None:
+                continue
+            indent = len(m["pre"])
+            while open_nodes and open_nodes[-1][0] >= indent:
+                open_nodes.pop()
+            under_cache = bool(open_nodes) and open_nodes[-1][1]
+            node_args = args[int(m["id"])]
+            if m["name"] in _PY_NODES and node_args not in cached:
+                runs[m["name"], re.search(r"(\w+)\(", node_args)[1]] += 1
+                if under_cache:
+                    cached.add(node_args)
+            open_nodes.append((indent, under_cache or m["name"] == "InMemoryRelation"))
+    return runs
+
+
+def test_python_crossing_budget(spark, tmp_path):
+    """Python-crossing budget, counted on plans rather than timed (every
+    Python task costs a fixed ~0.2 s of worker set-up however few rows it
+    gets). Over bootstrap and two rounds, the frames the engine writes
+    plan no Python-RDD scan (driver-local frames are LocalTableScans) and
+    no ArrowEvalPython (seeds canonicalize on the driver, admission is JVM
+    expressions), and the only Python operators that run are the three
+    with per-URL Python work: bootstrap runs the Bloom fold, each round
+    one fetch, one Bloom probe and one fold."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.engine import CrawlEngine
+    from crawlspark.sources import synthweb
+    from crawlspark.storage import CrawlStorage
+
+    # web_hosts=42 is the smallest fixture with a banned host
+    cfg = CrawlConfig(max_depth=1, max_rounds=2, web_hosts=42, shuffle_partitions=4)
+    storage = CrawlStorage(spark, tmp_path)
+    eng = CrawlEngine(spark, cfg, storage)
+    plans: list[str] = []
+    for name, frame_arg in (("write_round", 1), ("write_bloom_round", 0)):
+        def capture(*a, _write=getattr(storage, name), _i=frame_arg, **k):
+            plans.append(_plan(a[_i]))
+            return _write(*a, **k)
+
+        setattr(storage, name, capture)
+
+    cached: set[str] = set()
+    eng.bootstrap(synthweb.seed_list(cfg, n=42))
+    per_call = [_python_runs(plans, cached)]
+    all_plans = list(plans)
+    for rnd in (1, 2):
+        plans.clear()
+        eng.run_round(rnd)
+        per_call.append(_python_runs(plans, cached))
+        all_plans += plans
+
+    assert not any("applySchemaToPythonRDD" in p for p in all_plans)
+    assert not any("ArrowEvalPython" in p for p in all_plans)
+    fold = ("FlatMapGroupsInPandas", "build")
+    assert per_call[0] == Counter({fold: 1}), per_call[0]
+    for runs in per_call[1:]:
+        assert runs == Counter(
+            {("MapInPandas", "fetch_batches"): 1, ("MapInPandas", "probe"): 1, fold: 1}
+        ), runs
 
 
 def test_robots_join_is_broadcast(spark, tmp_path):
@@ -32,7 +114,7 @@ def test_robots_join_is_broadcast(spark, tmp_path):
     eng = CrawlEngine(spark, cfg, storage)
     eng.bootstrap(synthweb.seed_list(cfg, n=10))
     frontier = storage.read_round("frontier", 0)
-    joined = frontier.join(F.broadcast(eng._robots_df()), "host", "left")
+    joined = frontier.join(F.broadcast(eng._robots), "host", "left")
     plan = _plan(joined)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

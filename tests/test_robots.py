@@ -1,15 +1,15 @@
 """SURVEY.md §5 layer 1: robots matcher vs urllib.robotparser on generated
-rule sets, plus longest-prefix golden cases."""
+rule sets, longest-prefix golden cases, and the engine's JVM matcher vs the
+scalar one."""
 
 from __future__ import annotations
 
 import urllib.robotparser
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crawlspark.functions.robots import allowed, allowed_series, path_of
+from crawlspark.functions.robots import allowed, path_of
 
 
 def test_golden_longest_prefix():
@@ -69,18 +69,6 @@ def test_matches_urllib_robotparser(rule_specs, path_segs):
     rp.parse(lines)
     path = "/" + "/".join(path_segs)
     assert allowed(path, rules) == rp.can_fetch("*", "http://h.example" + path)
-
-
-def test_allowed_series_matches_scalar():
-    rules_a = [{"allow": True, "prefix": "/"}]
-    rules_b = [
-        {"allow": True, "prefix": "/"},
-        {"allow": False, "prefix": "/private"},
-    ]
-    paths = pd.Series(["/x", "/private/1", "/private", "/pub"])
-    rules = pd.Series([rules_a, rules_b, rules_b, rules_b])
-    got = allowed_series(paths, rules)
-    assert got.tolist() == [True, False, False, True]
 
 
 def test_wildcard_patterns():
@@ -161,3 +149,106 @@ def test_pattern_matches_regex_model():
         assert _pattern_matches(path, pat) == expect, (pat, path)
 
     check()
+
+
+# Path and rule text with regex metacharacters, wildcards, anchors and the
+# \\E that ends a quoted regex segment.
+_CHARS = "ab/.?+([\\E"
+_MISSING = "missing"  # the host has no row in the robots dimension
+
+
+@st.composite
+def _robots_case(draw):
+    """(rules, path): rules are NULL, missing from the dimension, or up to 5
+    rules whose prefixes are NULL, random, or cut from the path (so they
+    match) with a `*` put in or a `$`/`*` put on; a rule repeated with the
+    other verdict makes an equal-length tie."""
+    path = "/" + draw(st.text(alphabet=_CHARS + "*$", max_size=8))
+
+    def prefix():
+        kind = draw(st.sampled_from(["null", "random", "cut", "wild"]))
+        if kind == "null":
+            return None
+        if kind == "random":
+            return draw(st.text(alphabet=_CHARS + "*$", max_size=6))
+        p = path[: draw(st.integers(0, len(path)))]
+        if kind == "wild":
+            i = draw(st.integers(0, len(p)))
+            p = p[:i] + "*" + p[i + draw(st.integers(0, 2)):]
+        return p + draw(st.sampled_from(["", "$", "*"]))
+
+    rules = [
+        {"allow": draw(st.one_of(st.none(), st.booleans())), "prefix": prefix()}
+        for _ in range(draw(st.integers(0, 5)))
+    ]
+    if rules and draw(st.booleans()):
+        r = draw(st.sampled_from(rules))
+        rules.append({"allow": not r["allow"], "prefix": r["prefix"]})
+    return draw(st.sampled_from([rules, rules, rules, None, _MISSING])), path
+
+
+@settings(max_examples=40, deadline=None)
+@given(cases=st.lists(_robots_case(), min_size=1, max_size=30))
+def test_jvm_robots_expr_matches_scalar(spark, cases):
+    """Property: the engine's admission matcher — rules compiled into the
+    robots dimension, joined by host, matched by `allowed_expr` — equals
+    `allowed` on every path, covering *//$ patterns, equal-length ties,
+    NULL prefixes and allows, NULL or empty rules, hosts missing from the
+    dimension and paths full of regex metacharacters."""
+    from pyspark.sql import functions as F
+
+    from crawlspark.functions.robots import allowed_expr, compile_rules
+
+    dim = spark.createDataFrame(
+        [
+            (f"h{i}", compile_rules(rules))
+            for i, (rules, _) in enumerate(cases)
+            if rules != _MISSING
+        ],
+        "host string, rules array<struct<allow:boolean,prefix:string,regex:string>>",
+    )
+    paths = spark.createDataFrame(
+        [(i, f"h{i}", path) for i, (_, path) in enumerate(cases)],
+        "i int, host string, path string",
+    )
+    got = {
+        r["i"]: r["ok"]
+        for r in paths.join(dim, "host", "left")
+        .select("i", allowed_expr(F.col("path"), F.col("rules")).alias("ok"))
+        .collect()
+    }
+    want = {
+        i: allowed(path, None if rules == _MISSING else rules)
+        for i, (rules, path) in enumerate(cases)
+    }
+    assert got == want
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    urls=st.lists(
+        st.tuples(
+            st.sampled_from(["http", "https"]),
+            st.text(alphabet="ab.-:0", min_size=1, max_size=6),
+            st.one_of(
+                st.just(""),
+                st.text(alphabet="ab/.?+([=&:", max_size=10).map(lambda t: "/" + t),
+            ),
+        ).map("{0[0]}://{0[1]}{0[2]}".format),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_jvm_path_expr_matches_path_of(spark, urls):
+    """Property: the JVM path extraction equals `path_of`, URLs with no
+    path included."""
+    from pyspark.sql import functions as F
+
+    from crawlspark.functions.robots import path_expr
+
+    rows = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select("url", path_expr(F.col("url")).alias("path"))
+        .collect()
+    )
+    assert {r["url"]: r["path"] for r in rows} == {u: path_of(u) for u in urls}
